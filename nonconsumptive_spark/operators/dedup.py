@@ -194,6 +194,98 @@ def _band_rows(base: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# The near-duplicate pipeline every pair operator shares: a candidate
+# generator (LSH bands, prefix join, sort window), then ONE exact-Jaccard
+# verify, then — for the incremental paths — one best match per new doc.
+# ---------------------------------------------------------------------------
+def _band_candidates(left: DataFrame, right: DataFrame | None, id_col: str,
+                     a: str, b: str) -> DataFrame:
+    """Distinct (a, b) id pairs whose signature frames share at least one
+    LSH band key.  ``right=None`` self-joins ``left`` and keeps a < b, so
+    each pair is reported once; both sides then read one band frame
+    (building it twice measured ~10% slower on q_minhash_dedup_pairs at
+    sf0.01 on a 4-core VM)."""
+    bl = _band_rows(left, id_col)
+    br = bl if right is None else _band_rows(right, id_col)
+    pairs = bl.select(F.col(id_col).alias(a), "band", "band_key").join(
+        br.select(F.col(id_col).alias(b), "band", "band_key"), ["band", "band_key"])
+    if right is None:
+        pairs = pairs.filter(F.col(a) < F.col(b))
+    return pairs.select(a, b).distinct()
+
+
+def _verify_jaccard(cands: DataFrame, left: DataFrame, right: DataFrame,
+                    id_col: str, a: str, b: str, threshold: float,
+                    name: str) -> DataFrame:
+    """(a, b, jaccard) for the candidate pairs whose shingle-set Jaccard,
+    rounded to 4 places, is at least ``threshold``.  ``left`` and
+    ``right`` carry (id_col, shingles) for the a and b sides.
+
+    The set sizes and the intersection are computed once, behind a
+    barrier: a jaccard filter over the un-barriered attach joins is pushed
+    into their join condition, and array_intersect then runs twice per
+    candidate row.  The barrier holds |candidates| rows of ids and ints."""
+    sa = left.select(F.col(id_col).alias(a), F.col("shingles").alias("sh_a"))
+    sb = right.select(F.col(id_col).alias(b), F.col("shingles").alias("sh_b"))
+    sizes = materialize_once(
+        cands.join(sa, a).join(sb, b).select(
+            a, b,
+            F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"),
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+        ),
+        name,
+    )
+    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+    return (
+        sizes.withColumn("jaccard", F.round(jac, 4))
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _best_match(verified: DataFrame, key: str, match: str) -> DataFrame:
+    """(key, match, jaccard): one row per ``key`` holding its highest-
+    jaccard match, ties going to the lowest match id.  min_by over
+    (-jaccard, match) compares the id in its column's own ordering, so
+    string ids tie-break lexicographically."""
+    m = F.min_by(F.struct(F.col(match), F.col("jaccard")),
+                 F.struct((-F.col("jaccard")).alias("nj"), F.col(match).alias("mid")))
+    return verified.groupBy(key).agg(m.alias("m")).select(
+        key, F.col(f"m.{match}").alias(match), F.col("m.jaccard").alias("jaccard"))
+
+
+def _flag_against(docs: DataFrame, verified: DataFrame, id_col: str) -> DataFrame:
+    """(id, is_dup, match_id, jaccard) for every doc of ``docs`` from its
+    verified (new_id, old_id, jaccard) pairs; NULLs when it has none."""
+    best = _best_match(verified, "new_id", "old_id")
+    return (
+        docs.select(F.col(id_col).alias("new_id"))
+        .join(best, "new_id", "left")
+        .select(
+            F.col("new_id").alias(id_col),
+            F.col("old_id").isNotNull().alias("is_dup"),
+            F.col("old_id").alias("match_id"),
+            "jaccard",
+        )
+    )
+
+
+def _shingle_overlap(sh: DataFrame, id_col: str, keep) -> DataFrame:
+    """(doc_a, doc_b, inter): shared-shingle counts for the doc pairs with
+    at least one common shingle that the ``keep`` condition admits —
+    explode, self-join on the shingle, count per pair."""
+    exploded = sh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
+    a = exploded.select(F.col(id_col).alias("doc_a"), "shingle")
+    b = exploded.select(F.col(id_col).alias("doc_b"), "shingle")
+    return (
+        a.join(b, "shingle")
+        .filter(keep)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("inter"))
+    )
+
+
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(doc, hash_idx, minhash): k=16 md5-based affine minhashes over the
     doc's distinct 3-shingle set, exploded to rows (oracle-comparable)."""
@@ -222,16 +314,9 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     read it back rather than re-hashing the corpus.  ``shingles_df``
     shares a pre-built shingle frame with other consumers (e.g. the
     recall self-eval runs this AND the exact join off one shingling)."""
-    bands = _band_rows(_sig_base(docs, id_col, text_col, materialize=True,
-                                 shingles_df=shingles_df), id_col)
-    a = bands.select(F.col(id_col).alias("doc_a"), "band", "band_key")
-    b = bands.select(F.col(id_col).alias("doc_b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    base = _sig_base(docs, id_col, text_col, materialize=True,
+                     shingles_df=shingles_df)
+    return _band_candidates(base, None, id_col, "doc_a", "doc_b")
 
 
 def jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
@@ -242,16 +327,8 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
     sh = (shingles_df if shingles_df is not None
           else materialize_once(doc_shingles(docs, id_col, text_col),
                                 "shingles"))
-    exploded = sh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
+    inter = _shingle_overlap(sh, id_col, F.col("doc_a") < F.col("doc_b"))
     sizes = sh.select(F.col(id_col), F.size("shingles").alias("n"))
-    a = exploded.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = exploded.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("nb"))
     jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
@@ -284,16 +361,8 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.8,
     small-in-big pairs this operator exists to find."""
     sh = materialize_once(doc_shingles(docs, id_col, text_col),
                           "containment_shingles")
-    exploded = sh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
+    inter = _shingle_overlap(sh, id_col, F.col("doc_a") != F.col("doc_b"))
     sizes = sh.select(F.col(id_col), F.size("shingles").alias("n"))
-    a = exploded.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = exploded.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("na"))
     return (
         inter.join(sa, "doc_a")
@@ -318,40 +387,9 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
     path (see _shingle_hash) — same verified output w.h.p., no oracle."""
     base = _sig_base(docs, id_col, text_col, keep_shingles=True,
                      materialize=True, hash_fn=hash_fn)
-    bands = _band_rows(base, id_col)
-    a = bands.select(F.col(id_col).alias("doc_a"), "band", "band_key")
-    b = bands.select(F.col(id_col).alias("doc_b"), "band", "band_key")
-    cands = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sa = base.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = base.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
-    # Compute the intersection ONCE behind a checkpoint: a jaccard filter
-    # applied directly over the attach joins gets pushed into the join
-    # CONDITION, duplicating array_intersect per candidate row (r8 plan
-    # dump line 151: condition + projection = 2 codegen evaluations of
-    # the intersect — the built-in analog of guide §4.4's UDF
-    # duplication).  The checkpointed frame is |candidates| rows of ids
-    # and ints; the filter then runs on integers.
-    inter_df = materialize_once(
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"),
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-        ),
-        "mh_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter_df.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    cands = _band_candidates(base, None, id_col, "doc_a", "doc_b")
+    return _verify_jaccard(cands, base, base, id_col, "doc_a", "doc_b",
+                           threshold, "mh_verify")
 
 
 def dedup_against(new_docs: DataFrame, corpus_docs: DataFrame,
@@ -376,58 +414,10 @@ def dedup_against(new_docs: DataFrame, corpus_docs: DataFrame,
                    materialize=True)
     cb = _sig_base(corpus_docs, id_col, text_col, keep_shingles=True,
                    materialize=True)
-    a = _band_rows(nb, id_col).select(
-        F.col(id_col).alias("new_id"), "band", "band_key")
-    b = _band_rows(cb, id_col).select(
-        F.col(id_col).alias("old_id"), "band", "band_key")
-    cands = a.join(b, ["band", "band_key"]).select("new_id", "old_id").distinct()
-
-    sa = nb.select(F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_a"))
-    sb = cb.select(F.col(id_col).alias("old_id"), F.col("shingles").alias("sh_b"))
-    # checkpoint before the jaccard filter — see minhash_dedup_pairs: an
-    # un-barriered filter is pushed into the attach-join condition and
-    # array_intersect runs twice per candidate
-    inter_df = materialize_once(
-        cands.join(sa, "new_id")
-        .join(sb, "old_id")
-        .select(
-            "new_id", "old_id",
-            F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"),
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-        ),
-        "da_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    verified = (
-        inter_df.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    # Best match = highest jaccard, ties -> lowest existing id.  min_by
-    # over (-jaccard, old_id) keeps the tie-break in the id column's OWN
-    # ordering (numeric negation of the id would cast a string id to
-    # double -> NULL and silently corrupt match_id — r3 ADVICE finding).
-    best = (
-        verified.groupBy("new_id")
-        .agg(F.min_by(
-            F.struct(F.col("old_id"), F.col("jaccard")),
-            F.struct((-F.col("jaccard")).alias("nj"),
-                     F.col("old_id").alias("oid"))).alias("m"))
-        .select(
-            "new_id",
-            F.col("m.old_id").alias("match_id"),
-            F.col("m.jaccard").alias("jaccard"),
-        )
-    )
-    return (
-        new_docs.select(F.col(id_col).alias("new_id"))
-        .join(best, "new_id", "left")
-        .select(
-            F.col("new_id").alias(id_col),
-            F.col("match_id").isNotNull().alias("is_dup"),
-            "match_id",
-            "jaccard",
-        )
-    )
+    cands = _band_candidates(nb, cb, id_col, "new_id", "old_id")
+    verified = _verify_jaccard(cands, nb, cb, id_col, "new_id", "old_id",
+                               threshold, "da_verify")
+    return _flag_against(new_docs, verified, id_col)
 
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame | None = None,
@@ -806,8 +796,9 @@ def snm_pairs(docs: DataFrame, window: int = SNM_WINDOW,
     as TWO equi-joins on the rank bucket ``rank DIV window`` (same
     bucket + adjacent bucket, then the |Δrank| < window filter): every
     candidate pair shares a bucket key, so Catalyst shuffles on a short
-    integer — the sorted corpus never cross-joins.  Verification reuses
-    the materialized shingle table on both sides."""
+    integer — the sorted corpus never cross-joins.  The window joins move
+    ids and ranks only; the verify attaches the materialized shingle
+    arrays to the surviving pairs."""
     from nonconsumptive_spark.sources.readers import assign_dense_ids
 
     sh = materialize_once(
@@ -819,45 +810,42 @@ def snm_pairs(docs: DataFrame, window: int = SNM_WINDOW,
         "snm_shingles",
     )
     ranked = assign_dense_ids(
-        sh.select(id_col, "__key", "shingles"),
-        ["__key", id_col], id_name="rnk",
+        sh.select(id_col, "__key"), ["__key", id_col], id_name="rnk",
     ).withColumn("bkt", (F.col("rnk") / window).cast("long"))
 
     a = ranked.select(F.col(id_col).alias("doc_a"), F.col("rnk").alias("ra"),
-                      F.col("bkt").alias("ba"), F.col("shingles").alias("sh_a"))
+                      F.col("bkt").alias("ba"))
     b = ranked.select(F.col(id_col).alias("doc_b"), F.col("rnk").alias("rb"),
-                      F.col("bkt").alias("bb"), F.col("shingles").alias("sh_b"))
+                      F.col("bkt").alias("bb"))
     same = a.join(b, a["ba"] == b["bb"])
     nxt = a.join(b, a["ba"] + 1 == b["bb"])
     cands = (
         same.unionByName(nxt)
         .filter((F.col("rb") > F.col("ra"))
                 & (F.col("rb") - F.col("ra") < window))
+        .select("doc_a", "doc_b")
     )
-    # checkpoint before the jaccard filter — see minhash_dedup_pairs: an
-    # un-barriered filter is pushed into the bucket-join condition and
-    # array_intersect runs twice per within-window row
-    inter_df = materialize_once(
-        cands.select(
-            "doc_a", "doc_b",
-            F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"),
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-        ),
-        "snm_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter_df.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _verify_jaccard(cands, sh, sh, id_col, "doc_a", "doc_b",
+                           threshold, "snm_verify")
 
 
 def _threshold_fraction(threshold: float) -> tuple[int, int]:
-    """threshold as an exact rational (p, q) — every PPJoin bound derives
-    from these integers, never from the float."""
+    """threshold as an exact rational (p, q)."""
     from fractions import Fraction
     frac = Fraction(threshold).limit_denominator(1_000_000)
+    return frac.numerator, frac.denominator
+
+
+def _pruning_fraction(tp: int, tq: int) -> tuple[int, int]:
+    """The exact rational J* that PPJoin prunes against for threshold
+    tp/tq.  The output filter is round(J, 4) >= t, which (rounding half
+    up) holds exactly when J >= ceil(t·10⁴)/10⁴ − 1/20000: J = 0.49995
+    rounds onto t = 0.5.  Bounds derived from t itself would prune such
+    pairs; bounds derived from J* only ever drop pairs the verify
+    rejects."""
+    from fractions import Fraction
+    t4 = -(-tp * 10_000 // tq)  # ceil(t·10⁴)
+    frac = max(Fraction(2 * t4 - 1, 20_000), Fraction(0))
     return frac.numerator, frac.denominator
 
 
@@ -888,31 +876,28 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
     RAREST ones — must intersect the partner's prefix.  Candidates are
     therefore the equi-join of PREFIX rows only, plus the length filter
     t·na ≤ nb ≤ na/t; verification counts intersections only for
-    candidate pairs.
+    candidate pairs.  Every bound uses t = J*, the smallest Jaccard that
+    the rounded output filter keeps (see _pruning_fraction).
 
     vs jaccard_pairs (full shingle equi-join): the join fan-out on a
     frequent shingle is df², so skewed shingle distributions blow the
     naive join up; prefixes are rare-first, capping per-shingle fan-out.
     vs MinHash/LSH: exact — no recall loss, no signature tuning.
 
-    Plan: one df agg (shingle-vocab sized), one per-doc rank window
-    (PARTITIONED by doc), prefix self-join on the shingle key, then a
-    candidate-bounded verify join.  Nothing quadratic in the corpus."""
-    # All filter bounds use EXACT RATIONAL arithmetic (threshold = p/q):
-    # float expressions like ceil(0.2 * na) overstate the ceiling when the
+    Plan: one df count-window (shingle-vocab sized), one per-doc rank
+    window (PARTITIONED by doc), prefix self-join on the shingle key, then
+    a candidate-bounded verify join.  Nothing quadratic in the corpus."""
+    # All filter bounds use EXACT RATIONAL arithmetic (J* = p/q): float
+    # expressions like ceil(0.2 * na) overstate the ceiling when the
     # binary float sits above the decimal (0.2*5 -> 1.0000000000000002 ->
     # ceil 2 instead of 1), which would shorten prefixes / tighten filters
-    # and silently DROP qualifying pairs.  See _threshold_fraction/_ceil_mul.
-    tp, tq = _threshold_fraction(threshold)
+    # and silently DROP qualifying pairs.  See _ceil_mul.
+    tp, tq = _pruning_fraction(*_threshold_fraction(threshold))
     sh = materialize_once(doc_shingles(docs, id_col, text_col), "pp_shingles")
     exploded = sh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
     exploded = materialize_once(exploded, "pp_exploded")
     sizes = sh.select(F.col(id_col), F.size("shingles").cast("long").alias("n"))
 
-    # df comes from a count-window over the exploded frame itself (one
-    # keyed exchange) rather than a groupBy + join-back (two exchanges of
-    # the same string-keyed table) — r8, guide §2.3; the incremental path
-    # still passes its corpus dfreq as the order authority (join form).
     # The prefix frame feeds BOTH sides of the candidate self-join below;
     # without a checkpoint Spark re-executes the count-window + rank-window
     # pipeline once per side (4 Window nodes in the plan).
@@ -928,11 +913,10 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
     # positions (pa, pb) bounds the best possible overlap by the shorter
     # remaining suffix + 1; pairs that cannot reach the Jaccard-implied
     # overlap floor ceil(t·(na+nb)/(1+t)) are dropped BEFORE the
-    # deduplicating distinct — the filter is per-joined-row, so it also
-    # shrinks the distinct's shuffle.  The floor is exact integer
-    # arithmetic too: ceil(p·(na+nb)/(p+q)).
-    nanb = F.col("na") + F.col("nb")
-    overlap_floor = _ceil_div(F.lit(tp) * nanb, tp + tq)
+    # grouping — the filter is per-joined-row, so it also shrinks the
+    # grouping's shuffle.  The floor is exact integer arithmetic too:
+    # ceil(p·(na+nb)/(p+q)).
+    overlap_floor = _ceil_div(F.lit(tp) * (F.col("na") + F.col("nb")), tp + tq)
     best_overlap = F.least(F.col("na") - F.col("pa"),
                            F.col("nb") - F.col("pb")) + 1
     # Aggregated positional bound (PPJoin's running-overlap filter, in
@@ -946,9 +930,8 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
     # shared shingle sits after BOTH positions, and
     # o <= c + min(na - mpa, nb - mpb).  Pairs below the overlap floor
     # are provably sub-threshold — the filter only removes pairs the
-    # verify would reject.  The groupBy rides the exact shuffle the old
-    # .distinct() already paid; vs the any-row bound it is strictly
-    # tighter (equality only when c = 1).
+    # verify would reject.  Strictly tighter than the any-row bound
+    # (equality only when c = 1).
     cands = (
         pa.join(pb, "shingle")
         .filter(
@@ -964,55 +947,28 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5,
             F.col("_c")
             + F.least(F.col("na") - F.col("_mpa"),
                       F.col("nb") - F.col("_mpb"))
-            >= _ceil_div(F.lit(tp) * (F.col("na") + F.col("nb")), tp + tq)
+            >= overlap_floor
         )
-        .select("doc_a", "doc_b", "na", "nb")
+        .select("doc_a", "doc_b")
     )
-
-    # verify IN-ROW: join each candidate to the two full shingle ARRAYS
-    # and intersect inside the row (A/B vs exploding candidates against
-    # the shingle table: 2.80s vs 2.97s warm on materialized candidates
-    # at sf0.1 — a wash on this data; the in-row form is kept because it
-    # adds no |candidates| x |doc| intermediate rows, which is the term
-    # that grows with document size at production scale)
-    arr_a = sh.select(F.col(id_col).alias("doc_a"),
-                      F.col("shingles").alias("sh_a"))
-    arr_b = sh.select(F.col(id_col).alias("doc_b"),
-                      F.col("shingles").alias("sh_b"))
-    # checkpoint the intersection counts before the jaccard filter: an
-    # un-barriered filter over the attach joins is pushed into the join
-    # CONDITION, duplicating array_intersect per candidate row (r9 plan
-    # audit; the built-in analog of guide §4.4's UDF duplication — warm
-    # verify 2.33 -> ~1.5 s at sf0.1)
-    inter = materialize_once(
-        cands.join(arr_a, "doc_a")
-        .join(arr_b, "doc_b")
-        .select(
-            "doc_a", "doc_b", "na", "nb",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-             .alias("inter"),
-        ),
-        "pp_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    # verify IN-ROW on the two full shingle ARRAYS: no |candidates| x |doc|
+    # intermediate rows, the term that grows with document size
+    return _verify_jaccard(cands, sh, sh, id_col, "doc_a", "doc_b",
+                           threshold, "pp_verify")
 
 
 def _pp_rank_prefix(exploded: DataFrame, dfreq: DataFrame | None,
                     sizes: DataFrame, id_col: str, tp: int, tq: int) -> DataFrame:
-    """(id, shingle, n, pos) prefix rows under the (df asc, shingle asc)
-    global order — shared by the one-shot ppjoin and the persisted-index
-    incremental path.  ``dfreq`` is the ORDER AUTHORITY: the incremental
-    path passes the corpus's df table so batch and corpus prefixes agree
-    on one total order (batch-only shingles left-join to df NULL and
-    coalesce to 0 — unseen means rarest, which keeps the order total and
-    consistent).  ``dfreq=None`` means self-frequency: df is a
-    count-window over ``exploded`` itself — one keyed exchange instead
-    of the groupBy + join-back pair, identical rows (r8)."""
+    """(id, shingle, n, pos) prefix rows for pruning fraction tp/tq under
+    the (df asc, shingle asc) global order — shared by the one-shot
+    ppjoin and the persisted-index incremental path.  ``dfreq`` is the
+    ORDER AUTHORITY: the incremental path passes the corpus's df table so
+    batch and corpus prefixes agree on one total order (batch-only
+    shingles left-join to df NULL and coalesce to 0 — unseen means
+    rarest, which keeps the order total and consistent).  ``dfreq=None``
+    means self-frequency: df is a count-window over ``exploded`` itself —
+    one keyed exchange instead of the groupBy + join-back pair, identical
+    rows."""
     from pyspark.sql.window import Window
 
     if dfreq is None:
@@ -1047,7 +1003,8 @@ def ppjoin_index_write(docs: DataFrame, index_dir: str,
     sizes = sh.select(F.col(id_col), F.size("shingles").cast("long").alias("n"))
     dfreq = exploded.groupBy("shingle").agg(F.count("*").alias("df"))
     dfreq = materialize_once(dfreq, "ppw_df")
-    prefix = _pp_rank_prefix(exploded, dfreq, sizes, id_col, tp, tq)
+    prefix = _pp_rank_prefix(exploded, dfreq, sizes, id_col,
+                             *_pruning_fraction(tp, tq))
 
     opts = {"compression": compression}
     sh.write.mode("overwrite").options(**opts).parquet(f"{index_dir}/arrays")
@@ -1081,6 +1038,7 @@ def ppjoin_against(batch: DataFrame, index_dir: str,
             f"threshold {tp}/{tq}; its prefix rows are too short for "
             f"{threshold} — rewrite the index or pass threshold=None "
             f"to use the indexed threshold")
+    pp, pq = _pruning_fraction(tp, tq)
     idx_arrays = spark.read.parquet(f"{index_dir}/arrays")
     idx_dfreq = spark.read.parquet(f"{index_dir}/dfreq")
     idx_prefix = spark.read.parquet(f"{index_dir}/prefix")
@@ -1088,7 +1046,7 @@ def ppjoin_against(batch: DataFrame, index_dir: str,
     bsh = materialize_once(doc_shingles(batch, id_col, text_col), "ppa_sh")
     bexp = bsh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
     bsizes = bsh.select(F.col(id_col), F.size("shingles").cast("long").alias("n"))
-    bprefix = _pp_rank_prefix(bexp, idx_dfreq, bsizes, id_col, tp, tq)
+    bprefix = _pp_rank_prefix(bexp, idx_dfreq, bsizes, id_col, pp, pq)
 
     pa = bprefix.select(F.col(id_col).alias("new_id"), "shingle",
                         F.col("n").alias("na"))
@@ -1096,49 +1054,15 @@ def ppjoin_against(batch: DataFrame, index_dir: str,
                            F.col("n").alias("nb"))
     cands = (
         pa.join(pb, "shingle")
-        .filter((F.col("nb") >= _ceil_mul(F.col("na"), tp, tq))
-                & (F.col("na") >= _ceil_mul(F.col("nb"), tp, tq)))
-        .select("new_id", "old_id", "na", "nb")
+        .filter((F.col("nb") >= _ceil_mul(F.col("na"), pp, pq))
+                & (F.col("na") >= _ceil_mul(F.col("nb"), pp, pq)))
+        .select("new_id", "old_id")
         .distinct()
     )
-    arr_a = bsh.select(F.col(id_col).alias("new_id"),
-                       F.col("shingles").alias("sh_a"))
-    arr_b = idx_arrays.select(F.col(id_col).alias("old_id"),
-                              F.col("shingles").alias("sh_b"))
-    # checkpoint before the jaccard filter — see ppjoin_pairs: an
-    # un-barriered filter is pushed into the attach-join condition and
-    # array_intersect runs twice per candidate
-    inter = materialize_once(
-        cands.join(arr_a, "new_id").join(arr_b, "old_id")
-        .select("new_id", "old_id", "na", "nb",
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-                 .alias("inter")),
-        "ppa_verify",
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    verified = (
-        inter.withColumn("jaccard", F.round(jac, 4))
-        # the indexed threshold governs (threshold=None is valid): compare
-        # against the exact rational, not the possibly-absent float arg
-        .filter(F.col("jaccard") >= F.lit(tp) / F.lit(tq))
-    )
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("new_id").orderBy(F.desc("jaccard"),
-                                             F.asc("old_id"))
-    best = (
-        verified.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("new_id", F.col("old_id").alias("match_id"), "jaccard")
-    )
-    return (
-        batch.select(id_col)
-        .join(best, F.col(id_col) == F.col("new_id"), "left")
-        .select(
-            id_col,
-            F.col("match_id").isNotNull().alias("is_dup"),
-            "match_id", "jaccard",
-        )
-    )
+    # the indexed threshold governs (threshold=None is valid)
+    verified = _verify_jaccard(cands, bsh, idx_arrays, id_col, "new_id",
+                               "old_id", tp / tq, "ppa_verify")
+    return _flag_against(batch, verified, id_col)
 
 
 def lsh_tune(threshold: float, n_perm: int = N_HASHES,

@@ -29,72 +29,30 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from nonconsumptive_spark.operators.dedup import _band_rows, _sig_base
+from nonconsumptive_spark.operators.dedup import (
+    _band_candidates,
+    _best_match,
+    _sig_base,
+    _verify_jaccard,
+)
 from nonconsumptive_spark.streaming.corpus import _commit_epoch, applied_epoch
-
-def _verify(cands: DataFrame, left_sh: DataFrame, right_sh: DataFrame,
-            threshold: float) -> DataFrame:
-    """Exact-Jaccard verification of (doc_id, dup_of) candidates using the
-    shingle sets carried on each side."""
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    uni = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cands.join(left_sh, "doc_id")
-        .join(right_sh, "dup_of")
-        .withColumn("jaccard", F.round(inter / uni, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "dup_of", "jaccard")
-    )
 
 
 def neardup_flag_batch(batch_base: DataFrame, index: DataFrame | None,
                        threshold: float, id_col: str) -> DataFrame:
     """(doc_id, dup_of, jaccard): best near-dup match per flagged batch doc
     — against the index (cross-batch) and within the batch (intra)."""
-    new_bands = _band_rows(batch_base, id_col)
-    left_sh = batch_base.select(
-        F.col(id_col).alias("doc_id"), F.col("shingles").alias("sh_a")
-    )
-
-    intra_a = new_bands.select(F.col(id_col).alias("dup_of"), "band", "band_key")
-    intra_b = new_bands.select(F.col(id_col).alias("doc_id"), "band", "band_key")
-    intra = (
-        intra_a.join(intra_b, ["band", "band_key"])
-        .filter(F.col("dup_of") < F.col("doc_id"))  # later id is the dup
-        .select("doc_id", "dup_of")
-        .distinct()
-    )
-    right_sh_batch = batch_base.select(
-        F.col(id_col).alias("dup_of"), F.col("shingles").alias("sh_b")
-    )
-    flagged = _verify(intra, left_sh, right_sh_batch, threshold)
-
+    # within the batch the later id is the dup
+    intra = _band_candidates(batch_base, None, id_col, "dup_of", "doc_id")
+    flagged = _verify_jaccard(intra, batch_base, batch_base, id_col,
+                              "doc_id", "dup_of", threshold, "nd_verify")
     if index is not None:
-        idx_bands = _band_rows(index, id_col).select(
-            F.col(id_col).alias("dup_of"), "band", "band_key"
-        )
-        cross = (
-            new_bands.select(F.col(id_col).alias("doc_id"), "band", "band_key")
-            .join(idx_bands, ["band", "band_key"])
-            .select("doc_id", "dup_of")
-            .distinct()
-        )
-        right_sh_idx = index.select(
-            F.col(id_col).alias("dup_of"), F.col("shingles").alias("sh_b")
-        )
+        cross = _band_candidates(batch_base, index, id_col, "doc_id", "dup_of")
         flagged = flagged.unionByName(
-            _verify(cross, left_sh, right_sh_idx, threshold)
-        )
-
-    w = Window.partitionBy("doc_id").orderBy(F.desc("jaccard"), F.asc("dup_of"))
-    return (
-        flagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+            _verify_jaccard(cross, batch_base, index, id_col,
+                            "doc_id", "dup_of", threshold, "nd_verify"))
+    return _best_match(flagged, "doc_id", "dup_of")
 
 
 def _committed_epoch_dirs(root: Path, marker_dir: str) -> list[str]:
@@ -120,23 +78,15 @@ def start_neardup_ingest(stream: DataFrame, index_dir: str, flags_dir: str,
                          checkpoint_dir: str, threshold: float = 0.5,
                          id_col: str = "doc_id", text_col: str = "text"):
     """Wire a document stream into the incremental near-dup flagger."""
-    index_path = Path(index_dir)
-
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         if epoch_id <= applied_epoch(flags_dir):
             return  # replayed epoch: already committed, skip entirely
-        spark = batch_df.sparkSession
         base = _sig_base(batch_df, id_col, text_col, keep_shingles=True,
                          materialize=True)
         # read only COMMITTED epoch partitions of the index: a crashed
         # attempt's partial e{epoch} dir must not feed candidate lookup
         # (it would contain this very batch's own docs)
-        applied = applied_epoch(flags_dir)
-        committed = [
-            str(p) for p in sorted(index_path.glob("e*"))
-            if int(p.name[1:]) <= applied
-        ] if index_path.exists() else []
-        index = spark.read.parquet(*committed) if committed else None
+        index = read_index(batch_df.sparkSession, index_dir, flags_dir)
         flags = neardup_flag_batch(base, index, threshold, id_col)
         # per-epoch OVERWRITE, not a bare append: a crash between these
         # writes and the marker replays the epoch, and overwrite makes
@@ -144,7 +94,7 @@ def start_neardup_ingest(stream: DataFrame, index_dir: str, flags_dir: str,
         # appending duplicate flag/index rows
         flags.write.mode("overwrite").parquet(f"{flags_dir}/e{epoch_id}")
         base.select(id_col, "shingles", "sig").write.mode("overwrite").parquet(
-            str(index_path / f"e{epoch_id}")
+            str(Path(index_dir) / f"e{epoch_id}")
         )
         _commit_epoch(flags_dir, epoch_id)
 

@@ -211,7 +211,7 @@ def test_export_stacked_layout(spark, corpus_dir, tmp_path):
     assert back.count() == 3
 
 
-def test_cli_build_and_query(tmp_path):
+def test_cli_build_and_query(corpus_dir, tmp_path):
     """python -m nonconsumptive_spark: build materializes targets; query
     list prints the registry (reference commander.py CLI parity)."""
     from nonconsumptive_spark.__main__ import main
@@ -219,7 +219,7 @@ def test_cli_build_and_query(tmp_path):
     cache = tmp_path / "cli_cache"
     rc = main([
         "build",
-        "--texts", "/root/reference/tests/corpora/test1/texts",
+        "--texts", str(corpus_dir / "texts"),
         "--cache-dir", str(cache),
         "--targets", "document_lengths",
     ])

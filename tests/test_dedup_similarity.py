@@ -364,34 +364,61 @@ def test_dedup_against_incremental(spark):
     assert not rows[3]["is_dup"] and rows[3]["match_id"] is None
 
 
-def test_dedup_against_best_match_ties(spark):
-    from nonconsumptive_spark.operators.dedup import dedup_against
+def _best_dedup_against(new, corpus, tmp_path):
+    return dd.dedup_against(new, corpus, threshold=0.5)
 
+
+def _best_ppjoin_against(new, corpus, tmp_path):
+    idx = str(tmp_path / "ppidx")
+    dd.ppjoin_index_write(corpus, idx, threshold=0.5)
+    return dd.ppjoin_against(new, idx)
+
+
+def _best_neardup_flag_batch(new, corpus, tmp_path):
+    from nonconsumptive_spark.streaming.neardup import neardup_flag_batch
+
+    def sig(d):
+        return dd._sig_base(d, "doc_id", "text", keep_shingles=True,
+                            materialize=True)
+
+    return neardup_flag_batch(sig(new), sig(corpus), 0.5, "doc_id").select(
+        "doc_id", F.lit(True).alias("is_dup"),
+        F.col("dup_of").alias("match_id"), "jaccard")
+
+
+BEST_MATCH_PATHS = [_best_dedup_against, _best_ppjoin_against,
+                    _best_neardup_flag_batch]
+
+
+def _best_matches(path, new, corpus, tmp_path):
+    return {r["doc_id"]: (r["is_dup"], r["match_id"], r["jaccard"])
+            for r in path(new, corpus, tmp_path).collect()}
+
+
+@pytest.mark.parametrize("path", BEST_MATCH_PATHS, ids=lambda p: p.__name__[6:])
+def test_best_match_ties(spark, tmp_path, path):
     t = "one two three four five six seven eight nine ten"
     corpus = spark.createDataFrame([(10, t), (20, t)], ["doc_id", "text"])
     new = spark.createDataFrame([(1, t)], ["doc_id", "text"])
-    r = dedup_against(new, corpus).collect()[0]
     # equal jaccard 1.0 to both corpus docs -> lowest existing id wins
-    assert r["match_id"] == 10
+    assert _best_matches(path, new, corpus, tmp_path) == {1: (True, 10, 1.0)}
 
 
-def test_dedup_against_string_ids(spark):
-    """String doc ids must work: the r3 tie-break negated the id column
-    arithmetically, which cast strings to double -> NULL and reported a
-    real dup as clean (r3 ADVICE).  Ties now break on the id column's own
-    ordering (lexicographic for strings)."""
-    from nonconsumptive_spark.operators.dedup import dedup_against
-
+@pytest.mark.parametrize("path", BEST_MATCH_PATHS, ids=lambda p: p.__name__[6:])
+def test_best_match_string_ids(spark, tmp_path, path):
+    """String doc ids must work: negating the id column arithmetically
+    for the tie-break would cast strings to double -> NULL and report a
+    real dup as clean.  Ties break on the id column's own ordering
+    (lexicographic for strings)."""
     t = "one two three four five six seven eight nine ten"
     corpus = spark.createDataFrame(
         [("doc-b", t), ("doc-a", t),
          ("doc-z", "totally different words entirely unrelated content here")],
         ["doc_id", "text"])
     new = spark.createDataFrame([("batch-1", t)], ["doc_id", "text"])
-    r = dedup_against(new, corpus, threshold=0.5).collect()[0]
-    assert r["is_dup"] is True
-    assert r["match_id"] == "doc-a"  # lexicographic min on the jaccard tie
-    assert r["jaccard"] == 1.0
+    # lexicographic min on the jaccard tie
+    assert _best_matches(path, new, corpus, tmp_path) == {
+        "batch-1": (True, "doc-a", 1.0)}
 
 
 def test_minhash_fast_hash_same_verified_pairs(spark):
@@ -563,6 +590,44 @@ def test_ppjoin_index_threshold_mismatch_refused(spark, tmp_path):
         dd.ppjoin_against(docs, idx, threshold=0.5)
     # threshold=None uses the indexed threshold
     assert dd.ppjoin_against(docs, idx).count() == 20
+
+
+def _letters(i: int) -> str:
+    """i as a letters-only word (the tokenizer keeps only \\p{L} runs)."""
+    s = ""
+    while True:
+        i, r = divmod(i, 26)
+        s = chr(ord("a") + r) + s
+        if i == 0:
+            return s
+
+
+def test_ppjoin_keeps_pair_that_rounds_onto_threshold(spark, tmp_path):
+    """The output filter is round(J, 4) >= t, so J = 9999/20000 = 0.49995
+    rounds to 0.5 and qualifies at t = 0.5.  Prefix, length and overlap
+    bounds derived from t itself (overlap floor ceil(29999/3) = 10000 >
+    9999) would prune the pair: PPJoin must return what the full shingle
+    join returns, on the one-shot and the indexed path."""
+    words = [_letters(i) for i in range(15_002)]
+    a = " ".join(words)  # 15,000 distinct shingles
+    # the first 10,001 words (9,999 shared shingles), then 5,000 new words
+    b = " ".join(words[:10_001] + ["zz" + _letters(i) for i in range(5_000)])
+    docs = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
+    sizes = {r["doc_id"]: r["n"] for r in dd.doc_shingles(docs).select(
+        "doc_id", F.size("shingles").alias("n")).collect()}
+    assert sizes == {1: 15_000, 2: 14_999}
+
+    expect = {(1, 2, 0.5)}
+    naive = {(r["doc_a"], r["doc_b"], r["jaccard"])
+             for r in dd.jaccard_pairs(docs, threshold=0.5).collect()}
+    assert naive == expect
+    assert {(r["doc_a"], r["doc_b"], r["jaccard"])
+            for r in dd.ppjoin_pairs(docs, threshold=0.5).collect()} == expect
+
+    idx = str(tmp_path / "idx")
+    dd.ppjoin_index_write(docs.filter("doc_id = 1"), idx, threshold=0.5)
+    r = dd.ppjoin_against(docs.filter("doc_id = 2"), idx).collect()[0]
+    assert (r["is_dup"], r["match_id"], r["jaccard"]) == (True, 1, 0.5)
 
 
 def test_lsh_tune_minimizes_objective_and_is_monotone():

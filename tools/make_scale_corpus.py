@@ -23,6 +23,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import re
 from pathlib import Path
 
 import pyarrow as pa
@@ -68,9 +69,12 @@ def _remap_text(text: str | None, k: int) -> str | None:
     if text is None:
         return None
     pre = f"q{_alpha(k)}q"
-    # prefix each whitespace token: length grows by a constant per token,
-    # token count and per-doc structure are preserved, vocab is disjoint
-    return " ".join(pre + t if t else t for t in text.split(" "))
+    # prefix each whitespace-separated token, keeping every separator run
+    # (tabs, newlines, repeated spaces) verbatim: length grows by a constant
+    # per token, token count and per-doc structure are preserved, vocab is
+    # disjoint
+    return "".join(pre + t if t and not t.isspace() else t
+                   for t in re.split(r"(\s+)", text))
 
 
 def main() -> None:
@@ -88,6 +92,14 @@ def main() -> None:
             if col.endswith(("key", "_id")) and pa.types.is_integer(
                     tbl.schema.field(col).type):
                 strides[f"{tname}:{col}"] = pc.max(tbl[col]).as_py() + 1
+    # a replicated table's keys are offset by its authority's stride, so a
+    # missing authority (table or integer key column) must fail by name
+    missing = sorted({auth for tname, tbl in tables.items()
+                      for col, auth in OFFSET_GROUPS.get(tname, [])
+                      if col in tbl.column_names} - set(strides))
+    if missing:
+        raise SystemExit(f"{src}: key-stride authority missing: "
+                         f"{', '.join(missing)} (table:column)")
 
     for tname, tbl in tables.items():
         tdir = out / f"{tname}.parquet"
